@@ -89,13 +89,13 @@ private[graft] object StorageGates {
         "c_custkey", "ts", Seq("c_mktsegment", "c_acctbal"))
     }),
 
-    // ---- O5: join-based MERGE (broadcast micro-batch strategy) ----
+    // ---- O5: keyed MERGE (one-shuffle arg-max over target ∪ batch) ----
     "o5_merge_upsert" -> ((s, dir) => {
       val ev = eventRecords(s, dir)
       val existing = Dedup.latestWins(
         ev.filter(col("event_id") % 2 === 0), key, ver, tie)
       val incoming = ev.filter(col("event_id") % 2 === 1)
-      stateOut(Merge.upsertBroadcast(existing, incoming, key, ver, tie))
+      stateOut(Merge.upsert(existing, incoming, key, ver, tie))
     }),
 
     // ---- O5 replay idempotence — the exactly-once-by-idempotence
@@ -108,10 +108,10 @@ private[graft] object StorageGates {
       val existing = Dedup.latestWins(
         ev.filter(col("event_id") % 2 === 0), key, ver, tie)
       val incoming = ev.filter(col("event_id") % 2 === 1)
-      val once = Merge.upsertBroadcast(existing, incoming, key, ver, tie)
-      val twice = Merge.upsertBroadcast(once, incoming, key, ver, tie)
+      val once = Merge.upsert(existing, incoming, key, ver, tie)
+      val twice = Merge.upsert(once, incoming, key, ver, tie)
       val replayedHalf = incoming.filter(col("event_id") % 4 === 1)
-      stateOut(Merge.upsertBroadcast(twice, replayedHalf, key, ver, tie))
+      stateOut(Merge.upsert(twice, replayedHalf, key, ver, tie))
     }),
 
     // ---- O5: same semantics via the full-outer shuffle strategy ----
@@ -481,10 +481,10 @@ private[graft] object StorageGates {
       val (valid, bad) = graft.sink.Merge.quarantineSplit(ev, Seq(
         "low_value" -> (col("value") >= 0.05),
         "error_type" -> (col("event_type") =!= "error")))
-      // the valid side must still merge: exercise the broadcast upsert
+      // the valid side must still merge: exercise the keyed upsert
       // against an empty target and fold its row count into the output
       val target = valid.limit(0)
-      val merged = graft.sink.Merge.upsertBroadcast(
+      val merged = graft.sink.Merge.upsert(
         target, valid, Seq("event_id"), "ts")
       bad.select(col("event_id"), col("quarantine_reason"))
         .crossJoin(broadcast(

@@ -3,12 +3,13 @@ package graft.sink
 import java.nio.charset.StandardCharsets
 
 import org.apache.hadoop.fs.{FileSystem, Path}
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
-import org.apache.spark.sql.functions.{coalesce, col, count, hash, input_file_name, lit, max, min, pmod, regexp_extract}
+import org.apache.spark.sql.{Column, DataFrame, Encoder, Encoders, GraftSql, Observation, SparkSession}
+import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
+import org.apache.spark.sql.expressions.Aggregator
+import org.apache.spark.sql.functions.{coalesce, col, count, hash, lit, pmod, regexp_extract, udaf}
 import org.apache.spark.sql.types.{ByteType, IntegerType, LongType, ShortType, StructType}
 
 import graft.model.{IngestConfig, TargetTable}
-import graft.ops.Dedup
 
 /** A parquet-backed mutable table, hash-bucketed by merge key — the
   * engine's stand-in for the reference's Postgres target tables, designed
@@ -30,12 +31,14 @@ import graft.ops.Dedup
   *       __graft_bucket=3/...parquet   <- v2 rewrote only bucket 3
   * }}}
   *
-  * A merge computes the batch's bucket set from its (deduped, small) keys,
-  * reads ONLY those buckets' dirs, merges, writes them under the next
-  * delta, and the next manifest carries every untouched bucket over by
-  * reference. Bucket count is `TargetTable.buckets`; Spark `hash`
-  * (Murmur3) over the key columns assigns buckets on both the read and
-  * write side, so merge planning never shuffles the target.
+  * A merge computes the batch's bucket set from its keys, reads ONLY
+  * those buckets' dirs, merges, writes them under the next delta, and the
+  * next manifest carries every untouched bucket over by reference. Bucket
+  * count is `TargetTable.buckets`; Spark `hash` (Murmur3) over the key
+  * columns assigns buckets on both the read and write side, so a merge
+  * exchanges only the batch and the touched buckets' rows, never the
+  * table — in one shuffle that is also the writer's placement
+  * (`Merge.keyed`).
   *
   * Crash safety (no window loses committed state):
   *  - crash while writing a delta: no manifest references it; the next
@@ -166,11 +169,24 @@ final class ParquetTarget(spark: SparkSession, val table: TargetTable,
 
   private def schemaAt(v: Long, anyDir: String): StructType = synchronized {
     val s = schemaByVersion.getOrElseUpdate(v, readDirs(Seq(anyDir)).schema)
+    evictSchemas()
+    s
+  }
+
+  /** Record version `v`'s schema without reading a footer: a commit
+    * knows what it wrote. */
+  private def seedSchema(v: Long, s: StructType): Unit = synchronized {
+    schemaByVersion(v) = s
+    evictSchemas()
+  }
+
+  private def evictSchemas(): Unit =
     if (schemaByVersion.size > schemaCacheMax)
       schemaByVersion --= schemaByVersion.keys.toSeq.sorted
         .dropRight(schemaCacheMax)
-    s
-  }
+
+  private def cachedSchema(v: Long): Option[StructType] =
+    synchronized { schemaByVersion.get(v) }
 
   private def readDirs(dirs: Seq[String],
       schema: Option[StructType] = None): DataFrame = {
@@ -543,8 +559,13 @@ final class ParquetTarget(spark: SparkSession, val table: TargetTable,
     // the old DV entries dangle harmlessly against the retired paths
     currentVm().filter(_._2.nonEmpty).foreach { case (v, m) =>
       val cur = readDirsDv(m.values.toSeq.distinct, v)
-      commit(cur, Map.empty, config, onePerBucket = true,
-        sortWithin = clusterBy(cur))
+      val bucketed = cur.withColumn(BucketCol, bucketOf(cur))
+        .repartition(table.buckets, col(BucketCol))
+      val sortWithin = clusterBy(cur)
+      commit(Some(
+        if (sortWithin.isEmpty) bucketed
+        else bucketed.sortWithinPartitions(col(BucketCol) +: sortWithin: _*)),
+        Map.empty)
     }
   }
 
@@ -648,14 +669,13 @@ final class ParquetTarget(spark: SparkSession, val table: TargetTable,
     withCommitLock {
       currentVm().filter(_._2.nonEmpty).foreach { case (v, m) =>
         val cur = readDirsDv(m.values.toSeq.distinct, v)
-        val matched = cur.filter(coalesce(pred, lit(false)))
-        val hitB = matched.select(bucketOf(matched).as("__b")).distinct()
-          .collect().map(_.getInt(0)).toSet
+        val hitB = bucketsOf(cur.filter(coalesce(pred, lit(false)))).toSet
         if (hitB.nonEmpty) {
           val hitDirs = m.filter { case (b, _) => hitB(b) }
           val keep = readDirsDv(hitDirs.values.toSeq.distinct, v)
             .filter(!coalesce(pred, lit(false)))
-          commit(keep, m.view.filterKeys(b => !hitB(b)).toMap, config)
+          commit(Some(placeByKey(keep, config)),
+            m.view.filterKeys(b => !hitB(b)).toMap)
         }
       }
     }
@@ -687,8 +707,7 @@ final class ParquetTarget(spark: SparkSession, val table: TargetTable,
           if (matched.limit(1).count() > 0) {
             val merged = prior
               .map(_.unionByName(matched)).getOrElse(matched).distinct()
-            commit(emptyWithSchema(currentSchema(v, m)), m, config,
-              dvOverride = Some(merged))
+            commit(None, m, dvOverride = Some(merged))
           }
         } finally { matched.unpersist(); () }
       }
@@ -719,8 +738,7 @@ final class ParquetTarget(spark: SparkSession, val table: TargetTable,
             if (matched.limit(1).count() > 0) {
               val merged = prior
                 .map(_.unionByName(matched)).getOrElse(matched).distinct()
-              commit(emptyWithSchema(schema), m, config,
-                dvOverride = Some(merged))
+              commit(None, m, dvOverride = Some(merged))
             }
           } finally { matched.unpersist(); () }
         }
@@ -741,10 +759,41 @@ final class ParquetTarget(spark: SparkSession, val table: TargetTable,
   private def emptyWithSchema(s: StructType): DataFrame =
     spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], s)
 
-  /** Bucket ids the (small, deduped-later) batch touches. */
-  private def bucketsOf(batch: DataFrame): Seq[Int] =
-    batch.select(bucketOf(batch).as("b")).distinct()
-      .collect().map(_.getInt(0)).toSeq
+  /** Bucket ids the rows of `frame` hash into: ONE job and no shuffle —
+    * each task sets bits in a bucket bitset, the driver ORs them. On a
+    * persisted batch this job is also the one that fills the cache. */
+  private def bucketsOf(frame: DataFrame): Seq[Int] = {
+    val n = table.buckets
+    frame.select(bucketOf(frame)).queryExecution.toRdd
+      .aggregate(new java.util.BitSet(n))(
+        (seen, row) => { seen.set(row.getInt(0)); seen },
+        (a, b) => { a.or(b); a })
+      .stream().toArray.toSeq
+  }
+
+  /** The writer placement every keyed rewrite uses: rows of one key land
+    * in one task, each task writes its share of each bucket. */
+  private def placement(config: IngestConfig): Merge.Placement =
+    Merge.Placement(BucketCol, bucketOf, config.maxWriterPartitions)
+
+  private def placeByKey(df: DataFrame, config: IngestConfig): DataFrame =
+    placement(config)(df, table.keyCols)
+
+  /** Resolve `batch` against `stored` with the one-exchange kernel, placed
+    * for [[commit]]. */
+  private def keyed(stored: DataFrame, batch: DataFrame, op: Merge.Op,
+      config: IngestConfig): DataFrame =
+    Merge.keyed(stored, batch, table.keyCols, table.versionCol,
+      table.tieBreakCols, op, Some(placement(config)))
+
+  /** Current rows of `buckets` at version `v`, or an empty frame of
+    * `schema` when the table holds none of them. DV-aware: a rewritten
+    * bucket must not resurrect rows a vectored delete already marked. */
+  private def slice(v: Long, m: Map[Int, String], buckets: Seq[Int],
+      schema: StructType): DataFrame = {
+    val dirs = buckets.flatMap(m.get).distinct
+    if (dirs.nonEmpty) readDirsDv(dirs, v) else emptyWithSchema(schema)
+  }
 
   /** Cast every batch column that exists in the snapshot to its STORED
     * type. Two reasons this must cover ALL columns, not just keys:
@@ -777,22 +826,15 @@ final class ParquetTarget(spark: SparkSession, val table: TargetTable,
       // a zero-path schema read.
       currentVm().filter(_._2.nonEmpty) match {
         case None =>
-          commit(Dedup.latestWins(b, table.keyCols, table.versionCol,
-            table.tieBreakCols), Map.empty, config)
+          commit(Some(keyed(emptyWithSchema(b.schema), b, Merge.Op.Upsert(),
+            config)), Map.empty)
         case Some((v, m)) =>
           val schema = currentSchema(v, m)
           val bk = conformKeys(b, schema)
           val affected = bucketsOf(bk)
-          val sliceDirs = affected.flatMap(m.get).distinct
-          // DV-aware slice: a rewritten bucket must not resurrect rows a
-          // vectored delete already marked
-          val slice =
-            if (sliceDirs.nonEmpty) readDirsDv(sliceDirs, v)
-            else emptyWithSchema(schema)
-          val merged = Merge.upsertBroadcast(slice, bk,
-            table.keyCols, table.versionCol, table.tieBreakCols,
-            defaults = Map(table.softDeleteCol -> lit(true)))
-          commit(merged, m -- affected, config)
+          commit(Some(keyed(slice(v, m, affected, schema), bk,
+            Merge.Op.Upsert(Map(table.softDeleteCol -> lit(true))), config)),
+            m -- affected)
       }
     }}
 
@@ -803,16 +845,9 @@ final class ParquetTarget(spark: SparkSession, val table: TargetTable,
     withCommitLock { withCached(batch) { b =>
       currentVm().filter(_._2.nonEmpty).foreach { case (v, m) =>
         val schema = currentSchema(v, m)
-        val bk = conformKeys(b, schema)
         val migrating = !schema.fieldNames.contains(table.softDeleteCol)
-        val affected = if (migrating) m.keys.toSeq else bucketsOf(bk)
-        val sliceDirs = affected.flatMap(m.get).distinct
-        if (sliceDirs.nonEmpty) {
-          val merged = Merge.softDelete(readDirsDv(sliceDirs, v), bk,
-            table.keyCols,
-            table.versionCol, table.tieBreakCols, table.softDeleteCol)
-          commit(merged, m -- affected, config)
-        }
+        mergeDelete(v, m, conformKeys(b, schema), migrating,
+          Merge.Op.SoftDelete(table.softDeleteCol), config)
       }
     }}
 
@@ -820,21 +855,25 @@ final class ParquetTarget(spark: SparkSession, val table: TargetTable,
   def mergeHardDelete(batch: DataFrame, config: IngestConfig): Unit =
     withCommitLock { withCached(batch) { b =>
       currentVm().filter(_._2.nonEmpty).foreach { case (v, m) =>
-        val bk = conformKeys(b, currentSchema(v, m))
-        val affected = bucketsOf(bk)
-        val sliceDirs = affected.flatMap(m.get).distinct
-        if (sliceDirs.nonEmpty) {
-          val merged = Merge.hardDelete(readDirsDv(sliceDirs, v), bk,
-            table.keyCols,
-            table.versionCol, table.tieBreakCols)
-          commit(merged, m -- affected, config)
-        }
+        mergeDelete(v, m, conformKeys(b, currentSchema(v, m)),
+          allBuckets = false, Merge.Op.HardDelete, config)
       }
     }}
 
-  /** The batch is scanned several times per merge (bucket listing, dedup,
-    * broadcast sides) — cache it for the duration so the source micro-batch
-    * is read once, not once per use. */
+  /** Tombstone merge over the buckets the tombstones hash into (every
+    * bucket when `allBuckets`); no stored bucket touched ⇒ no commit. */
+  private def mergeDelete(v: Long, m: Map[Int, String], tombstones: DataFrame,
+      allBuckets: Boolean, op: Merge.Op, config: IngestConfig): Unit = {
+    val affected = if (allBuckets) m.keys.toSeq else bucketsOf(tombstones)
+    val sliceDirs = affected.flatMap(m.get).distinct
+    if (sliceDirs.nonEmpty)
+      commit(Some(keyed(readDirsDv(sliceDirs, v), tombstones, op, config)),
+        m -- affected)
+  }
+
+  /** The batch is scanned twice per merge (the bucket set, then the
+    * merge's exchange) — cache it for the duration so the source
+    * micro-batch is read once, not once per use. */
   private def withCached(batch: DataFrame)(f: DataFrame => Unit): Unit = {
     val cached = batch.persist()
     try f(cached) finally { cached.unpersist(); () }
@@ -957,19 +996,20 @@ final class ParquetTarget(spark: SparkSession, val table: TargetTable,
           (table.keyCols ++ table.orderingCols).diff(out.columns.toSeq)
         require(missing.isEmpty,
           s"migration dropped merge-contract columns: ${missing.mkString(", ")}")
-        commit(out, Map.empty, config)
+        commit(Some(placeByKey(out, config)), Map.empty)
       }
     }
 
-  /** Write `df`'s buckets under the next delta dir, publish a manifest of
-    * (carried-over ++ rewritten) buckets, repoint `_LATEST`, GC. The data
-    * fully materializes before any existing state is referenced or
-    * touched (we may be reading dirs we're superseding). Callers hold the
-    * `_LOCK` lease (every public mutator wraps itself in withCommitLock). */
+  /** Write `placed`'s buckets under the next delta dir, publish a
+    * manifest of (carried-over ++ rewritten) buckets, repoint `_LATEST`,
+    * GC. `placed` already carries [[BucketCol]] and its writer placement
+    * (it is written as is, no re-partitioning); None writes no data (a
+    * deletion-vector commit). The data fully materializes before any
+    * existing state is referenced or touched (we may be reading dirs we're
+    * superseding). Callers hold the `_LOCK` lease (every public mutator
+    * wraps itself in withCommitLock). */
   private def commit(
-      df: DataFrame, carryOver: Map[Int, String], config: IngestConfig,
-      onePerBucket: Boolean = false,
-      sortWithin: Seq[Column] = Nil,
+      placed: Option[DataFrame], carryOver: Map[Int, String],
       dvOverride: Option[DataFrame] = None): Unit = {
     val cur = currentVersion().getOrElse(0L)
     // Purge orphan deletion-vector sidecars from a crashed deleteVectored
@@ -981,53 +1021,59 @@ final class ParquetTarget(spark: SparkSession, val table: TargetTable,
     val next = cur + 1L
     val delta = deltaName(next)
     val deltaPath = new Path(root, delta)
-    val bucketed = df.withColumn(BucketCol, bucketOf(df))
-    val placed =
-      if (onePerBucket) {
-        val p = bucketed.repartition(table.buckets, col(BucketCol))
-        if (sortWithin.nonEmpty)
-          p.sortWithinPartitions(col(BucketCol) +: sortWithin: _*)
-        else p
-      }
-      else bucketed.repartition(config.maxWriterPartitions,
-        (BucketCol +: table.keyCols).map(col): _*)
-    placed.write.partitionBy(BucketCol).mode("overwrite").parquet(deltaPath.toString)
-
-    // Buckets actually written (empty merge output writes none).
-    val written = fs.listStatus(deltaPath).toSeq
-      .map(_.getPath.getName)
-      .filter(_.startsWith(s"$BucketCol="))
-      .map(n => n.stripPrefix(s"$BucketCol=").toInt -> s"$delta/$n")
-      .toMap
-    val entries = carryOver ++ written
-
-    // Zone-map sidecar (per-bucket min/max of the version column, for
-    // data-skipping range reads): recompute bounds for the buckets this
-    // commit wrote by scanning ONLY the fresh delta projected to the
-    // version column (footer-cheap), carry the previous sidecar's bounds
-    // for carried-over buckets (their files did not change). Written
-    // before the pointer repoint — an orphan sidecar from a crashed
-    // commit is unreachable, and a MISSING sidecar only disables
-    // pruning, never correctness. Non-integral version columns get no
-    // sidecar (no pruning).
-    val zonable = bucketed.schema.find(_.name == table.versionCol)
+    // The next version's schema is what this commit writes, as a footer
+    // read would infer it (parquet files hold every field nullable);
+    // carried-over buckets share it by the uniform-schema invariant.
+    val schema = placed match {
+      case Some(df) => Some(GraftSql.asNullable(
+        StructType(df.schema.filterNot(_.name == BucketCol))))
+      case None => cachedSchema(cur)
+    }
+    val zonable = schema.flatMap(_.find(_.name == table.versionCol))
       .map(_.dataType)
       .exists {
         case LongType | IntegerType | ShortType | ByteType => true
         case _ => false
       }
+
+    // Zone-map bounds (per-bucket min/max of the version column, for
+    // data-skipping range reads) of the buckets this commit writes are
+    // OBSERVED during the write — a per-bucket aggregate riding the write
+    // job, no re-read. NULL versions are skipped, so a bucket holding only
+    // NULLs gets no entry (unknown bounds: always read).
+    val observed = if (zonable) Some(Observation()) else None
+    // Buckets actually written (empty merge output writes none).
+    val written = placed.fold(Map.empty[Int, String]) { df =>
+      observed.fold(df)(o => df.observe(o,
+        udaf(new ParquetTarget.ZoneBounds(table.buckets),
+          Encoders.tuple(Encoders.scalaInt, Encoders.LONG))(
+          col(BucketCol), col(table.versionCol).cast("long")).as("z")))
+        .write.partitionBy(BucketCol).mode("overwrite")
+        .parquet(deltaPath.toString)
+      fs.listStatus(deltaPath).toSeq
+        .map(_.getPath.getName)
+        .filter(_.startsWith(s"$BucketCol="))
+        .map(n => n.stripPrefix(s"$BucketCol=").toInt -> s"$delta/$n")
+        .toMap
+    }
+    val entries = carryOver ++ written
+
+    // Zone-map sidecar: observed bounds for written buckets, the previous
+    // sidecar's bounds for carried-over ones (their files did not
+    // change). Written before the pointer repoint — an orphan sidecar
+    // from a crashed commit is unreachable, and a MISSING sidecar (or a
+    // missing bucket) only disables pruning, never correctness.
+    // Non-integral version columns get no sidecar (no pruning).
     if (zonable) {
-      val writtenZones: Map[Int, (Long, Long)] =
-        if (written.isEmpty) Map.empty
-        else spark.read.parquet(deltaPath.toString)
-          .groupBy(col(BucketCol).cast("int").as("__b"))
-          .agg(min(col(table.versionCol).cast("long")).as("__mn"),
-            max(col(table.versionCol).cast("long")).as("__mx"))
-          .collect()
-          .map(r => r.getInt(0) -> (r.getLong(1), r.getLong(2)))
-          .toMap
-      val carriedZones = currentVersion()
-        .map(readZones).getOrElse(Map.empty)
+      // The observed row arrives through the listener bus; should it never
+      // come, the written buckets just get no bounds.
+      val writtenZones = observed
+        .filter(_ => written.nonEmpty)
+        .flatMap(o => scala.util.Try(scala.concurrent.Await.result(
+          o.future, scala.concurrent.duration.Duration(10, "s"))).toOption)
+        .map(r => ParquetTarget.ZoneBounds.decode(r.getSeq[Long](0)))
+        .getOrElse(Map.empty)
+      val carriedZones = readZones(cur)
         .filter { case (b, _) => carryOver.contains(b) }
       val zones = carriedZones ++ writtenZones
       val zPath = new Path(root, zoneName(next))
@@ -1080,6 +1126,7 @@ final class ParquetTarget(spark: SparkSession, val table: TargetTable,
     if (fs.exists(pointer)) fs.delete(pointer, false)
     if (!fs.rename(pointerTmp, pointer))
       throw new IllegalStateException(s"failed to repoint $pointer")
+    schema.foreach(seedSchema(next, _))
 
     // GC: manifests older than the retention window, and bucket dirs no
     // RETAINED manifest references (readers resolved against any retained
@@ -1171,6 +1218,7 @@ final class ParquetTarget(spark: SparkSession, val table: TargetTable,
     if (fs.exists(pointer)) fs.delete(pointer, false)
     if (!fs.rename(pointerTmp, pointer))
       throw new IllegalStateException(s"failed to repoint $pointer")
+    cachedSchema(v).foreach(seedSchema(next, _))
     gcRetained(next, readManifest(next).getOrElse(Map.empty),
       table.retainVersions)
   }
@@ -1210,6 +1258,51 @@ final class ParquetTarget(spark: SparkSession, val table: TargetTable,
         if (!fs.listStatus(path).exists(_.getPath.getName.startsWith(s"$BucketCol=")))
           fs.delete(path, true)
       }
+    }
+  }
+}
+
+private object ParquetTarget {
+
+  /** Per-bucket [min, max] of a BIGINT over (bucket, value) rows, NULL
+    * values skipped: the buffer holds the minima in `[0, n)` and the maxima
+    * in `[n, 2n)`, so a bucket with no non-NULL value keeps min > max. */
+  final class ZoneBounds(n: Int)
+      extends Aggregator[(Int, java.lang.Long), Array[Long], Array[Long]] {
+    def zero: Array[Long] = {
+      val a = new Array[Long](2 * n)
+      java.util.Arrays.fill(a, 0, n, Long.MaxValue)
+      java.util.Arrays.fill(a, n, 2 * n, Long.MinValue)
+      a
+    }
+    def reduce(a: Array[Long], in: (Int, java.lang.Long)): Array[Long] = {
+      if (in._2 != null) {
+        val v: Long = in._2
+        if (v < a(in._1)) a(in._1) = v
+        if (v > a(n + in._1)) a(n + in._1) = v
+      }
+      a
+    }
+    def merge(a: Array[Long], b: Array[Long]): Array[Long] = {
+      var i = 0
+      while (i < n) {
+        if (b(i) < a(i)) a(i) = b(i)
+        if (b(n + i) > a(n + i)) a(n + i) = b(n + i)
+        i += 1
+      }
+      a
+    }
+    def finish(a: Array[Long]): Array[Long] = a
+    def bufferEncoder: Encoder[Array[Long]] = ExpressionEncoder[Array[Long]]()
+    def outputEncoder: Encoder[Array[Long]] = ExpressionEncoder[Array[Long]]()
+  }
+
+  object ZoneBounds {
+    /** bucket -> (min, max) for every bucket that saw a non-NULL value. */
+    def decode(a: collection.Seq[Long]): Map[Int, (Long, Long)] = {
+      val n = a.length / 2
+      (0 until n).filter(b => a(b) <= a(n + b))
+        .map(b => b -> ((a(b), a(n + b)))).toMap
     }
   }
 }

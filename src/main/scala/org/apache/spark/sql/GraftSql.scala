@@ -100,6 +100,10 @@ object GraftSql {
     } catch { case _: Throwable => () }
   }
 
+  /** `s` with every field, array element and map value nullable — the
+    * schema a parquet footer read infers for files Spark wrote from `s`. */
+  def asNullable(s: types.StructType): types.StructType = s.asNullable
+
   /** Register function builders into a live session's FunctionRegistry
     * (the post-construction twin of SparkSessionExtensions.injectFunction). */
   def registerFunctions(

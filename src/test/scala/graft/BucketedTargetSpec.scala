@@ -732,4 +732,152 @@ class BucketedTargetSpec extends SparkSpec {
     intercept[IllegalArgumentException](sink.rollbackTo(5L))
     intercept[IllegalArgumentException](sink.rollbackTo(0L))
   }
+
+  /** Spark's bucket of each key: `pmod(hash(pkey), buckets)`. */
+  private def bucketOfKeys(keys: Seq[Long], buckets: Int): Map[Long, Int] = {
+    import org.apache.spark.sql.functions.{col, hash, lit, pmod}
+    keys.toDF("pkey")
+      .select(col("pkey"), pmod(hash(col("pkey")), lit(buckets)))
+      .collect().map(r => r.getLong(0) -> r.getInt(1)).toMap
+  }
+
+  test("zone maps: a bucket whose versions are all NULL commits, has no " +
+      "sidecar entry, and range reads still equal the filtered full scan") {
+    val (sink, _) = mk(buckets = 8)
+    val buckets = bucketOfKeys(0L until 64L, 8)
+    val fresh = buckets(5L)
+    val (inFresh, elsewhere) = (0L until 64L).partition(k => buckets(k) == fresh)
+    sink.mergeUpsert(elsewhere.map(k => (k, Option(10L + k), k, s"v1-$k"))
+      .toDF("pkey", "ver", "seq", "payload"), cfg)
+    assert(!sink.zoneMaps().contains(fresh))
+    // NULL-version rows into the never-written bucket: the commit must
+    // succeed and leave that bucket's bounds unknown
+    sink.mergeUpsert(inFresh.map(k => (k, Option.empty[Long], k, s"n-$k"))
+      .toDF("pkey", "ver", "seq", "payload"), cfg)
+    assert(sink.read().get.count() == 64L)
+    val zones = sink.zoneMaps()
+    assert(!zones.contains(fresh), s"all-NULL bucket got bounds: $zones")
+    assert(zones.size == buckets.values.toSet.size - 1)
+    def pairs(df: org.apache.spark.sql.DataFrame) =
+      df.select("pkey", "ver").collect()
+        .map(r => (r.getLong(0), r.getLong(1))).sorted.toSeq
+    def checkRange(lo: Long, hi: Long) = {
+      val full = sink.read().get.filter($"ver" >= lo && $"ver" <= hi)
+      assert(pairs(sink.readWhereVersionBetween(lo, hi).get) == pairs(full))
+    }
+    checkRange(0L, Long.MaxValue)
+    checkRange(20L, 40L)
+    assert(sink.pruneAudit(1000L, 2000L).get._2 == 1, "unknown bucket is read")
+    // a non-NULL version in that bucket gives it bounds again
+    sink.mergeUpsert(Seq((inFresh.head, Option(1000L), 500L, "v"))
+      .toDF("pkey", "ver", "seq", "payload"), cfg)
+    assert(sink.zoneMaps()(fresh) == ((1000L, 1000L)))
+    checkRange(900L, 2000L)
+    assert(pairs(sink.readWhereVersionBetween(900L, 2000L).get) ==
+      Seq((inFresh.head, 1000L)))
+  }
+
+  test("every committing mutator seeds the schema a footer read infers") {
+    import org.apache.spark.sql.functions.{array, col, lit, map, struct}
+    val sink = mkRetained(buckets = 4)
+    def checkSeeded(p: ParquetTarget, step: String): Unit = {
+      val seeded = p.read().get.schema
+      val dirs = bucketDirs(p.table)
+      assert(dirs.nonEmpty, step)
+      dirs.foreach { d =>
+        assert(seeded == spark.read.parquet(d).schema,
+          s"$step: seeded schema differs from the footer of $d")
+      }
+    }
+    def rows(keys: Seq[Long], ver: Long) =
+      keys.map(k => (k, ver, k, s"p$k-$ver")).toDF("pkey", "ver", "seq", "payload")
+    sink.mergeUpsert(rows(0L until 32L, 1L), cfg)
+    checkSeeded(sink, "fresh mergeUpsert")
+    sink.mergeUpsert(rows(Seq(3L, 9L), 2L), cfg)
+    checkSeeded(sink, "warm mergeUpsert")
+    sink.mergeSoftDelete(rows(Seq(4L), 5L), cfg)
+    checkSeeded(sink, "soft-delete migration")
+    sink.mergeHardDelete(rows(Seq(5L), 5L), cfg)
+    checkSeeded(sink, "mergeHardDelete")
+    sink.deleteWhere(cfg, col("pkey") === 6L)
+    checkSeeded(sink, "deleteWhere")
+    sink.deleteVectoredKeys(Seq(7L).toDF("pkey"), cfg)
+    checkSeeded(sink, "deleteVectoredKeys")
+    sink.compact(cfg)
+    checkSeeded(sink, "compact")
+    val beforeMigrate = sink.versions().max
+    sink.migrate(cfg) { df =>
+      df.withColumn("nest", struct(lit(1).as("a"), array(lit("x")).as("tags")))
+        .withColumn("arr", array(col("seq"), lit(0L)))
+        .withColumn("mp", map(col("payload"), array(col("ver"))))
+    }
+    checkSeeded(sink, "migrate")
+    sink.rollbackTo(beforeMigrate)
+    checkSeeded(sink, "rollbackTo")
+    val dest = sink.rebucketTo(sink.table.copy(
+      path = s"${new Path(sink.table.path).getParent}/rebucketed",
+      buckets = 8), cfg)
+    checkSeeded(dest, "rebucketTo")
+  }
+
+  /** Absolute bucket dirs the current manifest references. */
+  private def bucketDirs(t: TargetTable): Seq[String] =
+    bucketVersions(t).toSeq.map { case (b, d) =>
+      new Path(new Path(t.path), s"$d/__graft_bucket=$b").toString
+    }
+
+  test("a warm micro-batch merge, soft delete and hard delete each run " +
+      "at most 3 Spark jobs") {
+    val (sink, _) = mk(buckets = 16)
+    def rows(keys: Seq[Long], ver: Long) =
+      keys.map(k => (k, ver, k, s"p$k-$ver")).toDF("pkey", "ver", "seq", "payload")
+    sink.mergeUpsert(rows(0L until 4000L, 1L), cfg)
+    sink.mergeSoftDelete(rows(Seq(1L), 2L), cfg) // migrates the flag in
+    val jobs = new JobCounter
+    spark.sparkContext.addSparkListener(jobs)
+    try {
+      val upsert = jobs.during(
+        sink.mergeUpsert(rows(Seq.tabulate(100)(i => i * 37L % 4000L), 3L), cfg))
+      val soft = jobs.during(sink.mergeSoftDelete(rows(Seq(10L, 20L), 4L), cfg))
+      val hard = jobs.during(sink.mergeHardDelete(rows(Seq(30L, 40L), 4L), cfg))
+      assert(upsert <= 3, s"warm mergeUpsert ran $upsert jobs")
+      assert(soft <= 3, s"mergeSoftDelete ran $soft jobs")
+      assert(hard <= 3, s"mergeHardDelete ran $hard jobs")
+    } finally spark.sparkContext.removeSparkListener(jobs)
+    val state = sink.read().get
+    assert(state.count() == 3998L)
+    assert(state.filter($"row_active" === false).count() == 3L)
+  }
+
+  /** Counts the jobs started between two fence jobs: the listener bus
+    * delivers events in order, so once the closing fence's start is seen,
+    * every job submitted before it has been counted. */
+  private final class JobCounter
+      extends org.apache.spark.scheduler.SparkListener {
+    private val groups = scala.collection.mutable.ArrayBuffer.empty[String]
+    override def onJobStart(
+        e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+      synchronized {
+        groups += Option(e.properties)
+          .flatMap(p => Option(p.getProperty("spark.jobGroup.id"))).getOrElse("")
+      }
+    private def fence(id: String): Int = {
+      val sc = spark.sparkContext
+      sc.setJobGroup(id, id)
+      try sc.parallelize(Seq(1), 1).count()
+      finally sc.clearJobGroup()
+      val deadline = System.nanoTime() + 30L * 1000000000L
+      while (synchronized(!groups.contains(id)) && System.nanoTime() < deadline)
+        Thread.sleep(5L)
+      synchronized(groups.indexOf(id))
+    }
+    def during(f: => Unit): Int = {
+      val id = java.util.UUID.randomUUID().toString
+      val from = fence(s"$id-a")
+      f
+      val to = fence(s"$id-b")
+      assert(from >= 0 && to > from, "fence jobs were not observed")
+      to - from - 1
+    }
+  }
 }

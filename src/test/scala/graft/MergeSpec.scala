@@ -29,7 +29,7 @@ class MergeSpec extends SparkSpec {
       (2L, 19L, 4L, "u2-stale"), // older → ignored
       (3L, 5L, 5L, "u3-insert"))) // new key → inserted
     for (m <- Seq(
-        Merge.upsertBroadcast(target, updates, K, V, T),
+        Merge.upsert(target, updates, K, V, T),
         Merge.upsertShuffle(target, updates, K, V, T))) {
       val out = m.collect().map(r => r.getLong(0) -> r.getString(3)).toMap
       assert(out == Map(1L -> "u1-new", 2L -> "t2", 3L -> "u3-insert"))
@@ -40,7 +40,7 @@ class MergeSpec extends SparkSpec {
     val target = df(Seq((1L, 10L, 1L, "stored")))
     val updates = df(Seq((1L, 10L, 1L, "incoming")))
     for (m <- Seq(
-        Merge.upsertBroadcast(target, updates, K, V, T),
+        Merge.upsert(target, updates, K, V, T),
         Merge.upsertShuffle(target, updates, K, V, T))) {
       assert(m.collect().map(_.getString(3)).toSeq == Seq("incoming"))
     }
@@ -49,7 +49,7 @@ class MergeSpec extends SparkSpec {
   test("upsert: intra-batch duplicates are deduped before merging") {
     val target = df(Nil)
     val updates = df(Seq((1L, 5L, 1L, "old"), (1L, 9L, 2L, "new")))
-    val out = Merge.upsertBroadcast(target, updates, K, V, T)
+    val out = Merge.upsert(target, updates, K, V, T)
     assert(out.collect().map(_.getString(3)).toSeq == Seq("new"))
   }
 
@@ -60,7 +60,7 @@ class MergeSpec extends SparkSpec {
     val target = Dedup.latestWins(df(rows(200)), K, V, T)
     val updates = df(rows(150))
     assertSameRows(
-      Merge.upsertBroadcast(target, updates, K, V, T),
+      Merge.upsert(target, updates, K, V, T),
       Merge.upsertShuffle(target, updates, K, V, T))
   }
 
@@ -68,8 +68,8 @@ class MergeSpec extends SparkSpec {
     val target = Dedup.latestWins(df(Seq(
       (1L, 10L, 1L, "t1"), (2L, 20L, 2L, "t2"))), K, V, T)
     val updates = df(Seq((1L, 15L, 3L, "u"), (3L, 1L, 4L, "i")))
-    val once = Merge.upsertBroadcast(target, updates, K, V, T)
-    val twice = Merge.upsertBroadcast(once, updates, K, V, T)
+    val once = Merge.upsert(target, updates, K, V, T)
+    val twice = Merge.upsert(once, updates, K, V, T)
     assertSameRows(once, twice)
   }
 

@@ -52,18 +52,85 @@ class PropertySpec extends SparkSpec {
     }
   }
 
+  /** Driver-side upsert model: per key the max (ver, seq, source) of the
+    * stored rows (source 0) and the batch (source 1) — incoming wins an
+    * exact ordering tie. */
+  private def modelUpsert(stored: Set[R], batch: List[R]): Set[R] =
+    (stored.toList.map(_ -> 0) ++ batch.map(_ -> 1)).groupBy(_._1._1)
+      .map { case (_, g) => g.maxBy { case (r, src) => (r._2, r._3, src) }._1 }
+      .toSet
+
+  /** Driver-side delete model: a stored row is deleted iff its key's max
+    * tombstone (ver, seq) is >= the row's; returns (row, still active). */
+  private def modelDelete(stored: Set[R], tombs: List[R]): Set[(R, Boolean)] = {
+    val newest = tombs.groupBy(_._1).map { case (k, g) =>
+      k -> g.map(t => (t._2, t._3)).max }
+    stored.map { r =>
+      r -> !newest.get(r._1).exists(t => Ordering[(Long, Long)].gteq(t, (r._2, r._3)))
+    }
+  }
+
+  private def canonFlagged(d: DataFrame): Set[(R, Boolean)] =
+    d.select("pkey", "ver", "seq", "payload", "row_active").collect().map(r =>
+      ((r.getLong(0), r.getLong(1), r.getLong(2), r.getString(3)),
+        r.getBoolean(4))).toSet
+
   test("merge: broadcast == shuffle == dedup-of-whole on random splits") {
     val rng = new scala.util.Random(422)
-    (1 to 3).foreach { _ =>
+    val K = Seq("pkey"); val V = "ver"; val T = Seq("seq")
+    val cfg = graft.model.IngestConfig(name = "prop", maxWriterPartitions = 2)
+    (1 to 3).foreach { i =>
       val rows = randomRows(rng, 40)
       val cut = 1 + rng.nextInt(math.max(1, rows.size - 2))
-      val (a, b) = rows.splitAt(cut)
-      val target = Dedup.latestWins(df(a), Seq("pkey"), "ver", Seq("seq"))
-      val viaB = Merge.upsertBroadcast(target, df(b), Seq("pkey"), "ver", Seq("seq"))
-      val viaS = Merge.upsertShuffle(target, df(b), Seq("pkey"), "ver", Seq("seq"))
+      val (a, b0) = rows.splitAt(cut)
+      val target = Dedup.latestWins(df(a), K, V, T)
       val whole = model(rows)
-      assert(canonRows(viaB) == whole, s"broadcast diverged (cut=$cut)")
-      assert(canonRows(viaS) == whole, s"shuffle diverged (cut=$cut)")
+      assert(canonRows(Merge.upsert(target, df(b0), K, V, T)) == whole,
+        s"kernel diverged (cut=$cut)")
+      assert(canonRows(Merge.upsertShuffle(target, df(b0), K, V, T)) == whole,
+        s"shuffle diverged (cut=$cut)")
+
+      // exact (pkey, ver, seq) ties with stored rows: incoming must win
+      val stored = model(a)
+      val ties = stored.toList.filter(_ => rng.nextBoolean())
+        .map(r => r.copy(_4 = r._4 + "!"))
+      val b = b0 ++ ties
+      val merged = modelUpsert(stored, b)
+      assert(canonRows(Merge.upsert(target, df(b), K, V, T)) == merged,
+        s"kernel diverged on ties (cut=$cut)")
+      assert(canonRows(Merge.upsertShuffle(target, df(b), K, V, T)) == merged,
+        s"shuffle diverged on ties (cut=$cut)")
+
+      // tombstones per stored key: none, stale, exact tie, or fresh (with
+      // a stale sibling), plus one for a key that is not stored
+      val tombs = merged.toList.flatMap { r =>
+        rng.nextInt(4) match {
+          case 0 => Nil
+          case 1 => List((r._1, r._2 - 1, r._3, "stale"))
+          case 2 => List((r._1, r._2, r._3, "tie"))
+          case _ => List((r._1, r._2 + 1, 0L, "fresh"), (r._1, r._2 - 1, 1L, "stale"))
+        }
+      } :+ ((100L + i, 0L, 0L, "absent"))
+      val soft = modelDelete(merged, tombs)
+      val state = Merge.upsert(target, df(b), K, V, T)
+      assert(canonFlagged(Merge.softDelete(state, df(tombs), K, V, T)) == soft,
+        s"soft delete diverged (cut=$cut)")
+      assert(canonRows(Merge.hardDelete(state, df(tombs), K, V, T)) ==
+        soft.collect { case (r, true) => r }, s"hard delete diverged (cut=$cut)")
+
+      // the same splits through a 16-bucket target
+      val dir = java.nio.file.Files.createTempDirectory("graft_prop_").toString
+      val pt = new graft.sink.ParquetTarget(spark, graft.model.TargetTable(
+        "t", s"$dir/t", keyCols = K, versionCol = V, tieBreakCols = T,
+        buckets = 16))
+      pt.mergeUpsert(df(a), cfg)
+      pt.mergeUpsert(df(b), cfg)
+      assert(canonRows(pt.read().get) == merged, s"target upsert (cut=$cut)")
+      pt.mergeSoftDelete(df(tombs), cfg)
+      assert(canonFlagged(pt.read().get) == soft, s"target soft delete (cut=$cut)")
+      pt.mergeHardDelete(df(tombs), cfg)
+      assert(canonFlagged(pt.read().get) == soft.filter(_._2),
+        s"target hard delete (cut=$cut)")
     }
   }
 
@@ -77,7 +144,7 @@ class PropertySpec extends SparkSpec {
       val incremental = batches.tail.foldLeft(
         Dedup.latestWins(df(batches.head), Seq("pkey"), "ver", Seq("seq"))) {
         (acc, batch) =>
-          Merge.upsertBroadcast(acc, df(batch), Seq("pkey"), "ver", Seq("seq"))
+          Merge.upsert(acc, df(batch), Seq("pkey"), "ver", Seq("seq"))
       }
       assert(canonRows(incremental) == model(rows))
     }
